@@ -101,8 +101,9 @@ class Batch:
     paths: dict[int, str]            # id -> planted path
 
     @property
-    def n_kept(self) -> int:
-        return sum(1 for p in self.paths.values() if not p.startswith("drop_"))
+    def kept_ids(self) -> set[int]:
+        """Ids of the rows the F1 and F2 filters keep."""
+        return {sid for sid, p in self.paths.items() if not p.startswith("drop_")}
 
 
 def _word(rng: random.Random, n_syll: int = 3) -> str:

@@ -46,12 +46,12 @@ SMOKE_SEED = 7
 # ``large_base`` planted rows amplified ``large_reps`` times.
 SIZES = {
     "full": dict(
-        brands=60, models=50, series=5, setup_reps=3, history_setup_reps=2,
+        brands=60, models=50, series=5,
         small_rows=1300, small_pool=2, large_base=5000, large_reps=20,
         hist_rows=48_000, hist_months=24, upsert_rows=2000,
     ),
     "smoke": dict(
-        brands=8, models=10, series=2, setup_reps=1, history_setup_reps=1,
+        brands=8, models=10, series=2,
         small_rows=200, small_pool=2, large_base=400, large_reps=3,
         hist_rows=1200, hist_months=24, upsert_rows=100,
     ),
@@ -77,7 +77,7 @@ REPORTS = ("key_players", "capacity_share", "top3", "year_slice", "multi_grain")
 
 E2E_UNITS = {
     "setup_s": "s", "cycle_p50_s": "s", "rows_per_s": "rows/s",
-    "ok_ratio": "ratio", "peak_rss_mb": "MB",
+    "ok_ratio": "ratio", "retained_mb": "MB",
 }
 LAYER_UNITS = {
     "pipeline.build_s": "s", "pipeline.exec_s": "s",
@@ -91,6 +91,7 @@ LAYER_UNITS = {
     "delta.files_removed": "count", "delta.write_amp": "ratio",
     "delta.read_s": "s", "delta.files_scanned": "count",
     **{f"report.{r}_s": "s" for r in REPORTS},
+    "process.peak_rss_mb": "MB",
     "trace.overhead_s": "s",
 }
 
@@ -99,13 +100,9 @@ class CheckFailed(Exception):
     pass
 
 
-def _median(xs):
-    return statistics.median(xs) if xs else 0.0
-
-
 def _configure_env(work: str) -> None:
-    """Keep every file Spark and the JVM write inside the checkout, and
-    size the session; must run before pyspark starts the JVM."""
+    """Keep every file Spark and the JVM write inside the checkout; must
+    run before pyspark starts the JVM."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["SPARK_LOCAL_DIRS"] = tmp
@@ -113,13 +110,7 @@ def _configure_env(work: str) -> None:
     # -UsePerfData: no hsperfdata files in the system temp directory
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ["SPARK_DRIVER_MEM"] = "2g"
-    # a pre-touched fixed-size heap: peak RSS then no longer swings with how
-    # far the collector let the heap grow before its first collections
-    os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--conf spark.ui.showConsoleProgress=false"
-        " --driver-java-options '-Xms2g -XX:+AlwaysPreTouch' pyspark-shell"
-    )
+    os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.ui.showConsoleProgress=false pyspark-shell"
 
 
 def _history_schema():
@@ -153,14 +144,14 @@ class Bench:
         self.layer: dict[str, list[float]] = {}
         self.op_walls: list[float] = []
         self.rows_per_s: list[float] = []
-        self.setup_times: list[float] = []
         self.attempted = 0
         self.failed = 0
         self.n_group = 0
+        self.inputs = os.path.join(work, "inputs")
 
     # -- session ------------------------------------------------------------
 
-    def start(self) -> None:
+    def load_package(self) -> None:
         from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark import (
             schemas,
         )
@@ -179,9 +170,19 @@ class Bench:
         )
 
         self.S, self.P, self.D, self.A, self.H = schemas, pipeline, delta_lite, analysis, history
+        self.get_spark = get_spark
+
+    def start(self, first_input: str, schema, n_rows: int) -> None:
+        """The timed set-up: a cold JVM and session from ``get_spark``, then
+        the first job, a count of ``first_input`` (generated before the
+        timer starts)."""
         t0 = time.perf_counter()
-        self.spark = get_spark(app_name="perfbench")
-        self.t_session = time.perf_counter() - t0
+        self.spark = self.get_spark(app_name="perfbench")
+        n = self.spark.read.schema(schema).parquet(first_input).count()
+        self.setup_s = time.perf_counter() - t0
+        print(f"setup: {self.setup_s:.3f} s", file=sys.stderr)
+        if n != n_rows:
+            raise CheckFailed(f"input {first_input}: {n} rows, generated {n_rows}")
         self.sc = self.spark.sparkContext
         self.sc.setLogLevel("ERROR")
         self.jvm_pid = int(self.spark._jvm.java.lang.ProcessHandle.current().pid())
@@ -214,6 +215,25 @@ class Bench:
                     kb += int(line.split()[1])
         return kb / 1024.0
 
+    def retained_mb(self) -> float:
+        """JVM heap and non-heap in use after two full collections, plus the
+        Python process's peak RSS: the memory the process keeps, which
+        unlike the JVM's RSS does not depend on how far the collector
+        chose to grow the heap."""
+        jvm = self.spark._jvm
+        # the first collection lets Spark's ContextCleaner drop the blocks
+        # of dead broadcasts; the second frees them
+        jvm.java.lang.System.gc()
+        time.sleep(1.0)
+        jvm.java.lang.System.gc()
+        mem = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        heap = mem.getHeapMemoryUsage().getUsed() / 2**20
+        non_heap = mem.getNonHeapMemoryUsage().getUsed() / 2**20
+        py = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+        print(f"retained: heap {heap:.1f} MB, non-heap {non_heap:.1f} MB, python {py:.1f} MB",
+              file=sys.stderr)
+        return heap + non_heap + py
+
     def _group(self, prefix: str) -> str:
         self.n_group += 1
         g = f"{prefix}-{self.n_group}"
@@ -229,15 +249,26 @@ class Bench:
 
         return self.spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
-    def _write(self, rows: list, schema, path: str) -> None:
-        self._frame(rows, schema).write.mode("overwrite").parquet(path)
+    @staticmethod
+    def _write(rows: list, schema, path: str) -> None:
+        """Generated rows (dicts or tuples) as one parquet file, written
+        with pyarrow, so no Spark session is needed."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if rows and not isinstance(rows[0], dict):
+            rows = [dict(zip(schema.names, r)) for r in rows]
+        os.makedirs(path, exist_ok=True)
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        pq.write_table(table, os.path.join(path, "part-0.parquet"))
 
     # -- closed loop --------------------------------------------------------
 
     def loop(self, op) -> None:
         """Run ``op`` back to back until ``seconds`` have passed (at least
-        once).  An operation that raises counts as failed; a failed output
-        check ends the run."""
+        once).  An operation that raises counts as failed and records no
+        sample; a failed output check ends the run."""
         t_end = time.perf_counter() + self.seconds
         while True:
             self.attempted += 1
@@ -253,61 +284,59 @@ class Bench:
             if time.perf_counter() >= t_end:
                 break
 
-    def _setup_done(self, rep: int, t0: float) -> None:
-        self.setup_times.append(time.perf_counter() - t0)
-        print(f"setup {rep}: {self.setup_times[-1]:.3f} s", file=sys.stderr)
-
     # -- batch workloads ----------------------------------------------------
 
-    def setup_batches(self, large: bool) -> None:
+    def generate_batches(self, large: bool) -> None:
+        """Catalog, regex KB, FX and the raw batches, as parquet files."""
+        s, S, d = self.sizes, self.S, self.inputs
+        rng = random.Random(self.seed)
+        self.cat = cat = gen.make_catalog(rng, s["brands"], s["models"], s["series"])
+        self._write(cat.model_ref, S.MODEL_REF_SCHEMA, f"{d}/model_ref")
+        self._write(cat.regex_kb, S.REGEX_KB_SCHEMA, f"{d}/regex_kb")
+        self._write(cat.fx, S.FX_RATES_SCHEMA, f"{d}/fx")
+        specs = [(s["small_rows"], 1)] * (1 if large else s["small_pool"])
+        if large:
+            specs.append((s["large_base"], s["large_reps"]))
+        self.batches = []
+        for i, (n, reps) in enumerate(specs):
+            b = gen.make_batch(rng, cat, n, id_base=(i + 1) * 10**6, month=202405 + i % 3)
+            path = f"{d}/batch{i}"
+            self._write(b.rows, S.SHIPMENTS_SCHEMA, path if reps == 1 else path + "_base")
+            self.batches.append((path, b, reps))
+
+    def load_batches(self) -> None:
+        """Untimed set-up after the first job: amplify the large batch and
+        open every input."""
         from pyspark.sql import functions as F
 
-        s, S, read = self.sizes, self.S, self.spark.read
-        for rep in range(s["setup_reps"]):
-            t0 = time.perf_counter()
-            rng = random.Random(self.seed)
-            cat = gen.make_catalog(rng, s["brands"], s["models"], s["series"])
-            d = os.path.join(self.work, f"inputs{rep}")
-            self._group("setup")
-            self._write(cat.model_ref, S.MODEL_REF_SCHEMA, f"{d}/model_ref")
-            self._write(cat.regex_kb, S.REGEX_KB_SCHEMA, f"{d}/regex_kb")
-            self._write(cat.fx, S.FX_RATES_SCHEMA, f"{d}/fx")
-            specs = [(s["small_rows"], 1)] * (1 if large else s["small_pool"])
-            if large:
-                specs.append((s["large_base"], s["large_reps"]))
-            pool = []
-            for i, (n, reps) in enumerate(specs):
-                b = gen.make_batch(rng, cat, n, id_base=(i + 1) * 10**6, month=202405 + i % 3)
-                path = f"{d}/batch{i}"
-                if reps == 1:
-                    self._write(b.rows, S.SHIPMENTS_SCHEMA, path)
-                else:
-                    # amplify: same planted rows, fresh ids, amounts
-                    # scaled within the F1 margins of the planted paths
-                    self._write(b.rows, S.SHIPMENTS_SCHEMA, path + "_base")
-                    rep_c = F.col("__rep")
-                    scale = 1 + (rep_c % 7) / 100.0
-                    (
-                        read.schema(S.SHIPMENTS_SCHEMA).parquet(path + "_base")
-                        .crossJoin(self.spark.range(reps).withColumnRenamed("id", "__rep"))
-                        .withColumn("shipment_id", F.col("shipment_id") + rep_c * REPLICA_STRIDE)
-                        .withColumn("amount_in_usd", F.round(F.col("amount_in_usd") * scale, 2))
-                        .withColumn("price_in_usd", F.col("price_in_usd") * scale)
-                        .drop("__rep")
-                        .write.mode("overwrite").parquet(path)
-                    )
-                sh = read.schema(S.SHIPMENTS_SCHEMA).parquet(path)
-                n_in = sh.count()   # the first job on each input
-                if n_in != len(b.rows) * reps:
-                    raise CheckFailed(f"input {path}: {n_in} rows, generated {len(b.rows) * reps}")
-                pool.append((sh, b, reps, n_in))
-            self.frames = dict(
-                model_ref=read.schema(S.MODEL_REF_SCHEMA).parquet(f"{d}/model_ref"),
-                regex_kb=read.schema(S.REGEX_KB_SCHEMA).parquet(f"{d}/regex_kb"),
-                fx=read.schema(S.FX_RATES_SCHEMA).parquet(f"{d}/fx"),
-            )
-            self._setup_done(rep, t0)
-        self.cat, self.pool = cat, pool
+        S, read, d = self.S, self.spark.read, self.inputs
+        self._group("setup")
+        self.pool = []
+        for path, b, reps in self.batches:
+            if reps > 1:
+                # amplify: same planted rows, fresh ids, amounts scaled
+                # within the F1 margins of the planted paths
+                rep_c = F.col("__rep")
+                scale = 1 + (rep_c % 7) / 100.0
+                (
+                    read.schema(S.SHIPMENTS_SCHEMA).parquet(path + "_base")
+                    .crossJoin(self.spark.range(reps).withColumnRenamed("id", "__rep"))
+                    .withColumn("shipment_id", F.col("shipment_id") + rep_c * REPLICA_STRIDE)
+                    .withColumn("amount_in_usd", F.round(F.col("amount_in_usd") * scale, 2))
+                    .withColumn("price_in_usd", F.col("price_in_usd") * scale)
+                    .drop("__rep")
+                    .write.mode("overwrite").parquet(path)
+                )
+            sh = read.schema(S.SHIPMENTS_SCHEMA).parquet(path)
+            n_in = sh.count()
+            if n_in != len(b.rows) * reps:
+                raise CheckFailed(f"input {path}: {n_in} rows, generated {len(b.rows) * reps}")
+            self.pool.append((sh, b, reps, n_in))
+        self.frames = dict(
+            model_ref=read.schema(S.MODEL_REF_SCHEMA).parquet(f"{d}/model_ref"),
+            regex_kb=read.schema(S.REGEX_KB_SCHEMA).parquet(f"{d}/regex_kb"),
+            fx=read.schema(S.FX_RATES_SCHEMA).parquet(f"{d}/fx"),
+        )
 
     def batch_op(self, entry, timed: bool) -> None:
         sh, batch, reps, n_in = entry
@@ -330,16 +359,25 @@ class Bench:
         got = out.select("shipment_id", "brand", "model", "remark").collect()
         self.spark.catalog.clearCache()
         self.check_batch(got, batch, reps, n_in, record=self.traced and timed)
-        if timed:
+        if timed:   # only operations whose output passed the checks record samples
             self.op_walls.append(t2 - t0)
             self.rows_per_s.append(n_in / (t2 - t1))
             self._add("pipeline.build_s", t1 - t0)
             self._add("pipeline.exec_s", t2 - t1)
 
     def check_batch(self, got, batch, reps: int, n_in: int, record: bool) -> None:
-        want_rows = batch.n_kept * reps
-        if len(got) != want_rows:
-            raise CheckFailed(f"pipeline output has {len(got)} rows, expected {want_rows}")
+        want = {sid + k * REPLICA_STRIDE for sid in batch.kept_ids for k in range(reps)}
+        if len(got) != len(want):
+            raise CheckFailed(f"pipeline output has {len(got)} rows, expected {len(want)}")
+        ids = [r[0] for r in got]
+        if len(set(ids)) != len(ids):
+            raise CheckFailed(f"pipeline output repeats {len(ids) - len(set(ids))} shipment ids")
+        if set(ids) != want:
+            extra, lost = sorted(set(ids) - want), sorted(want - set(ids))
+            raise CheckFailed(
+                f"pipeline output holds {len(extra)} rows that F1/F2 drop or the input lacks,"
+                f" e.g. {extra[:3]}, and loses {len(lost)} kept rows, e.g. {lost[:3]}"
+            )
         bad = []
         for r in got:
             exp = batch.expected.get(r[0] % REPLICA_STRIDE)
@@ -402,7 +440,10 @@ class Bench:
         self.check_batch(got, batch, reps, n_in, record=False)
 
     def run_batches(self, large: bool) -> None:
-        self.setup_batches(large)
+        self.generate_batches(large)
+        path, b, _ = self.batches[0]
+        self.start(path, self.S.SHIPMENTS_SCHEMA, len(b.rows))
+        self.load_batches()
         # batch_large warms up on a reference-size batch; batch_small on
         # the last pooled batch, and its timed operations cycle the pool
         if large:
@@ -435,34 +476,36 @@ class Bench:
             walls.append(time.perf_counter() - t0)
 
         self.loop(timed_op)
-        if self.traced:
-            self._add("trace.overhead_s", _median(walls) - untraced)
+        if self.traced and walls:
+            self._add("trace.overhead_s", statistics.median(walls) - untraced)
 
     # -- history workload ---------------------------------------------------
 
-    def setup_history(self) -> None:
-        s, D = self.sizes, self.D
-        months = gen.months_from(FIRST_MONTH, s["hist_months"])
-        for rep in range(s["history_setup_reps"]):
-            t0 = time.perf_counter()
-            rng = random.Random(self.seed)
-            cat = gen.make_catalog(rng, s["brands"], s["models"], s["series"])
-            rows = gen.make_history(rng, cat, s["hist_rows"], months)
-            table = os.path.join(self.work, f"history{rep}")
-            self._group("setup")
-            df = self._frame(rows, _history_schema())
-            D.write_delta(df, table, partition_by=["month"])
-            # adopt the keyed bucket layout the upserts use
-            D.upsert_delta(self.spark, table, df.limit(0), ["shipment_id"])
-            n = D.read_delta(self.spark, table).count()   # first job on the table
-            if n != len(rows):
-                raise CheckFailed(f"seeded history has {n} rows, generated {len(rows)}")
-            self._setup_done(rep, t0)
-        self.cat, self.rng, self.table = cat, rng, table
+    def generate_history(self) -> None:
+        """The catalog and the seed rows of the history, as parquet."""
+        s = self.sizes
+        self.months = gen.months_from(FIRST_MONTH, s["hist_months"])
+        self.rng = rng = random.Random(self.seed)
+        self.cat = gen.make_catalog(rng, s["brands"], s["models"], s["series"])
+        rows = gen.make_history(rng, self.cat, s["hist_rows"], self.months)
+        self._write(rows, _history_schema(), os.path.join(self.inputs, "history_rows"))
         self.stored = {r["shipment_id"]: r["month"] for r in rows}
         self.amounts = {r["shipment_id"]: r["amount_in_usd"] for r in rows}
         self.next_id = len(rows) + 1
-        self.months = months
+
+    def load_history(self) -> None:
+        """Untimed set-up after the first job: the month-partitioned
+        table, moved to the keyed bucket layout the upserts keep."""
+        D = self.D
+        self.table = os.path.join(self.work, "history")
+        self._group("setup")
+        df = self.spark.read.schema(_history_schema()).parquet(
+            os.path.join(self.inputs, "history_rows"))
+        D.write_delta(df, self.table, partition_by=["month"])
+        D.upsert_delta(self.spark, self.table, df.limit(0), ["shipment_id"])
+        n = D.read_delta(self.spark, self.table).count()
+        if n != len(self.stored):
+            raise CheckFailed(f"seeded history has {n} rows, generated {len(self.stored)}")
 
     def _reports(self, snap, year: int) -> dict:
         """The reference report set over one snapshot, as lazy builders."""
@@ -561,48 +604,60 @@ class Bench:
             raise CheckFailed(f"key-players total {got!r} != snapshot sum {total!r}")
 
     def run_history(self) -> None:
-        self.setup_history()
+        self.generate_history()
+        self.start(os.path.join(self.inputs, "history_rows"), _history_schema(),
+                   len(self.stored))
+        self.load_history()
         self.run_loop(lambda: self.history_op(False), self.history_op)
 
     # -- results ------------------------------------------------------------
 
     def run(self, name: str) -> None:
         """Run one workload; afterwards ``e2e`` and ``per_layer`` hold the
-        medians and the session is stopped."""
-        self.start()
+        medians and the session is stopped.  Raises CheckFailed if no timed
+        operation completed its output check."""
+        self.load_package()
         try:
             if name == "history_report":
                 self.run_history()
             else:
                 self.run_batches(large=name == "batch_large")
+            if not self.op_walls:
+                raise CheckFailed("no timed operation completed its output check")
+            self._add("process.peak_rss_mb", self.peak_rss_mb())
             self.e2e = {
-                "setup_s": self.t_session + _median(self.setup_times),
-                "cycle_p50_s": _median(self.op_walls),
-                "rows_per_s": _median(self.rows_per_s),
+                "setup_s": self.setup_s,
+                "cycle_p50_s": statistics.median(self.op_walls),
+                "rows_per_s": statistics.median(self.rows_per_s),
                 "ok_ratio": (self.attempted - self.failed) / self.attempted,
-                "peak_rss_mb": self.peak_rss_mb(),
+                "retained_mb": self.retained_mb(),
             }
             # layers the workload does not run read 0
-            self.per_layer = {k: _median(self.layer.get(k, [])) for k in LAYER_UNITS}
+            self.per_layer = {
+                k: statistics.median(self.layer[k]) if k in self.layer else 0.0
+                for k in LAYER_UNITS
+            }
             if self.traced:
                 os.makedirs(OUT_DIR, exist_ok=True)
                 self.tracer.write(os.path.join(OUT_DIR, f"trace-{name}-seed{self.seed}.json"))
         finally:
-            self.stop()
+            if hasattr(self, "spark"):
+                self.stop()
 
     def summary(self, name: str) -> None:
         """Human-readable lines, with the workload's own metric names."""
         e = self.e2e
         lines = [("setup_s", e["setup_s"], "s")]
         if name == "history_report":
-            lines += [("upsert_p50_s", _median(self.layer.get("delta.upsert_s", [])), "s"),
-                      ("report_p50_s", _median(self.layer.get("report_s", [])), "s")]
+            lines += [("upsert_p50_s", statistics.median(self.layer["delta.upsert_s"]), "s"),
+                      ("report_p50_s", statistics.median(self.layer["report_s"]), "s")]
         else:
             lines.append(("batch_p50_s", e["cycle_p50_s"], "s"))
         lines += [("cycle_p50_s", e["cycle_p50_s"], "s"),
                   ("rows_per_s", e["rows_per_s"], "rows/s"),
                   ("failed_ratio", self.failed / self.attempted, "ratio"),
-                  ("peak_rss_mb", e["peak_rss_mb"], "MB"),
+                  ("peak_rss_mb", self.layer["process.peak_rss_mb"][0], "MB"),
+                  ("retained_mb", e["retained_mb"], "MB"),
                   ("operations", self.attempted, "count")]
         for k, v, u in lines:
             print(f"{name:15s} {k:14s} {v:.6g} {u}")
@@ -672,6 +727,8 @@ def main() -> int:
         b.run(args.workload)
     except CheckFailed as e:
         print(f"output check failed: {e}", file=sys.stderr)
+        print(json.dumps({"correct": False, "attempted": max(b.attempted, 1),
+                          "failed": b.failed, "metrics": {}}))
         return 1
     finally:
         _remove_work(work)

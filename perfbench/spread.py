@@ -1,11 +1,12 @@
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/spread.py --workload batch_small --seeds 1-10 [--seconds N]
+    python3 perfbench/spread.py --workload batch_small --seeds 1-10
 
-Runs ``perfbench/run.py`` once per seed, one after another, and prints per
-metric the median, the quartiles (``statistics.quantiles(n=4)``) and the
-spread (Q3 - Q1) / median next to a third of the metric's bound from
-BENCHMARK.json.  ``--from-logs`` reads saved stdout files instead.
+Runs the benchmark command of BENCHMARK.json with its ``run_seconds`` once
+per seed, one after another, and prints per metric the median, the
+quartiles (``statistics.quantiles(n=4)``) and the spread (Q3 - Q1) / median
+next to a third of the metric's bound.  Exits 1 if a run fails or a spread
+is not below a third of its bound.
 """
 
 from __future__ import annotations
@@ -26,45 +27,33 @@ def _seeds(spec: str) -> list[int]:
     return list(range(int(lo), int(hi or lo) + 1))
 
 
-def _last_json(text: str) -> dict:
-    return json.loads(text.strip().splitlines()[-1])
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload")
+    ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--seconds", type=int)
-    ap.add_argument("--from-logs", nargs="*", default=None)
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
     bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
-    seconds = args.seconds or spec["run_seconds"]
     results = []
-    if args.from_logs is not None:
-        for path in args.from_logs:
-            with open(path) as fh:
-                results.append(_last_json(fh.read()))
-    else:
-        for seed in _seeds(args.seeds):
-            cmd = [*spec["command"], "--workload", args.workload, "--seed", str(seed),
-                   "--seconds", str(seconds), "--trace", "0"]
-            proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
-            if proc.returncode != 0:
-                sys.stderr.write(proc.stderr[-4000:])
-                print(f"seed {seed}: exit {proc.returncode}")
-                return 1
-            results.append(_last_json(proc.stdout))
-            print(f"seed {seed}: " + ", ".join(
-                f"{k}={v['value']:.4g}" for k, v in results[-1]["metrics"].items()))
+    for seed in _seeds(args.seeds):
+        cmd = [*spec["command"], "--workload", args.workload, "--seed", str(seed),
+               "--seconds", str(spec["run_seconds"]), "--trace", "0"]
+        proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True)
+        if proc.returncode != 0:
+            sys.stderr.write(proc.stderr[-4000:])
+            print(f"seed {seed}: exit {proc.returncode}")
+            return 1
+        results.append(json.loads(proc.stdout.strip().splitlines()[-1]))
+        print(f"seed {seed}: " + ", ".join(
+            f"{k}={v['value']:.4g}" for k, v in results[-1]["metrics"].items()))
     ok = True
     for name, bound in bounds.items():
         vals = [r["metrics"][name]["value"] for r in results]
         med = statistics.median(vals)
         q1, _, q3 = statistics.quantiles(vals, n=4)
         spread = (q3 - q1) / med
-        flag = "" if spread < bound / 3 or name == "setup_s" else "  <-- above bound/3"
+        flag = "" if spread < bound / 3 else "  <-- not below bound/3"
         ok = ok and flag == ""
         print(f"{name:14s} median {med:12.6g}  q1 {q1:12.6g}  q3 {q3:12.6g}  "
               f"spread {spread:.4f}  bound/3 {bound / 3:.4f}{flag}")
