@@ -32,13 +32,11 @@ def convert_usd_to_cny(
         F.col("month").alias("__fx_m"),
         "usd_cny_rate",
     )
-    joined = df.withColumn("__y", F.year(d)).withColumn("__m", F.month(d)).join(
+    joined = df.withColumns({"__y": F.year(d), "__m": F.month(d)}).join(
         F.broadcast(fxr),
         on=(F.col("__y") == F.col("__fx_y")) & (F.col("__m") == F.col("__fx_m")),
         how="left",
     )
-    for c in cols:
-        joined = joined.withColumn(
-            c.replace("_usd", "_cny"), F.col(c) * F.col("usd_cny_rate")
-        )
-    return joined.drop("__y", "__m", "__fx_y", "__fx_m", "usd_cny_rate")
+    return joined.withColumns(
+        {c.replace("_usd", "_cny"): F.col(c) * F.col("usd_cny_rate") for c in cols}
+    ).drop("__y", "__m", "__fx_y", "__fx_m", "usd_cny_rate")

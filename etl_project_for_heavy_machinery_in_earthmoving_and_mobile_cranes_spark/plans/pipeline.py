@@ -1,4 +1,5 @@
-"""The reference cleaning pipeline as ONE lazy DataFrame chain.
+"""The reference cleaning pipeline as a lazy DataFrame chain cut at its
+three fork points.
 
 Reference lifecycle (SURVEY §3.1, notebook cells 4→60): coerce/derive →
 min-amount filter → normalize → brand/model containment match → type &
@@ -13,6 +14,11 @@ Scale notes: the dims (model_ref, regex_kb, fx) broadcast; the fact
 table is never shuffled except (a) winner-selection over *matched* rows
 keyed by shipment_id and (b) the outlier median groupBy — both AQE-
 coalesced.  No Python UDFs anywhere.
+
+Each stage adds its columns in one ``withColumns``/``select`` step: every
+``withColumn`` call re-analyzes the whole plan below it.  ``run_pipeline``
+materializes the fact table at the three frames that later stages fork
+(see its docstring), so the plan it returns starts at the last cut.
 """
 
 from __future__ import annotations
@@ -55,18 +61,14 @@ def coerce_and_derive(df: DataFrame, min_amount: float = 10000.0) -> DataFrame:
     out = df.filter(keep)
     qty = F.col("qty").cast("double")
     weight = F.col("weight_in_kg").cast("double")
-    return (
-        out.withColumn("qty_n", qty)
-        .withColumn("weight_kg_n", weight)
-        .withColumn("date_parsed", F.to_date(F.col("date"), "yyyy/MM/dd"))
-        .withColumn(
-            "price_in_usd",
-            F.when(qty != 0, F.col("amount_in_usd") / qty),
-        )
-        .withColumn(
-            "unit_weight_in_ton",
-            F.when(qty != 0, weight / qty / 1000),
-        )
+    return out.withColumns(
+        {
+            "qty_n": qty,
+            "weight_kg_n": weight,
+            "date_parsed": F.to_date(F.col("date"), "yyyy/MM/dd"),
+            "price_in_usd": F.when(qty != 0, F.col("amount_in_usd") / qty),
+            "unit_weight_in_ton": F.when(qty != 0, weight / qty / 1000),
+        }
     )
 
 
@@ -76,9 +78,12 @@ def coerce_and_derive(df: DataFrame, min_amount: float = 10000.0) -> DataFrame:
 
 
 def normalize(df: DataFrame) -> DataFrame:
-    out = df.withColumn(
-        "description2", T.normalize_text(F.col("product_description"), alias_brands=True)
-    ).withColumn("supplier2", T.normalize_text(F.col("supplier"), alias_brands=True))
+    out = df.withColumns(
+        {
+            "description2": T.normalize_text(F.col("product_description"), alias_brands=True),
+            "supplier2": T.normalize_text(F.col("supplier"), alias_brands=True),
+        }
+    )
     return out.filter(T.irrelevant_keyword_filter(F.col("description2")))
 
 
@@ -179,10 +184,12 @@ def label_cascades(
 ) -> DataFrame:
     d2 = F.col("description2")
     typer = L.excavator_type if file_type == "excavator" else L.crane_type
-    out = df.withColumn("type", typer(d2, F.col("type")))
-    out = out.withColumn("new_used", L.new_or_used(d2, strict_reference_compat))
-    return out.withColumn(
-        "remark", F.when(L.is_parts(d2), R_PARTS).otherwise(F.col("remark"))
+    return df.withColumns(
+        {
+            "type": typer(d2, F.col("type")),
+            "new_used": L.new_or_used(d2, strict_reference_compat),
+            "remark": F.when(L.is_parts(d2), R_PARTS).otherwise(F.col("remark")),
+        }
     )
 
 
@@ -240,15 +247,13 @@ def _regex_pass(
     )
     out = df.join(upd, on=ID, how="left")
     hit = F.col("rx_model").isNotNull()
-    return (
-        out.withColumn("brand", F.when(hit, F.col("rx_brand")).otherwise(F.col("brand")))
-        .withColumn("model", F.when(hit, F.col("rx_model")).otherwise(F.col("model")))
-        .withColumn("type", F.when(hit, F.col("rx_type")).otherwise(F.col("type")))
-        .withColumn(
-            "capacity", F.when(hit, F.col("rx_capacity")).otherwise(F.col("capacity"))
-        )
-        .withColumn("remark", F.when(hit, F.col("rx_remark")).otherwise(F.col("remark")))
-        .drop("rx_brand", "rx_model", "rx_type", "rx_capacity", "rx_remark")
+    rx = {c: f"rx_{c}" for c in ("brand", "model", "type", "capacity", "remark")}
+    return out.select(
+        *[
+            F.when(hit, F.col(rx[c])).otherwise(F.col(c)).alias(c) if c in rx else c
+            for c in out.columns
+            if c not in rx.values()
+        ]
     )
 
 
@@ -271,10 +276,14 @@ def regex_stage(df: DataFrame, regex_kb: DataFrame) -> DataFrame:
 def capacity_from_text(df: DataFrame) -> DataFrame:
     extracted = T.extract_capacity_tons(F.col("description2"))
     fired = F.col("capacity").isNull() & extracted.isNotNull()
-    return df.withColumn(
-        "remark",
-        F.when(fired & (F.col("remark") == R_NONE), R_CAPACITY).otherwise(F.col("remark")),
-    ).withColumn("capacity", F.when(fired, extracted).otherwise(F.col("capacity")))
+    return df.withColumns(
+        {
+            "remark": F.when(fired & (F.col("remark") == R_NONE), R_CAPACITY).otherwise(
+                F.col("remark")
+            ),
+            "capacity": F.when(fired, extracted).otherwise(F.col("capacity")),
+        }
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -317,27 +326,29 @@ def add_intervals(df: DataFrame, file_type: str = "excavator", width: int = 10) 
         evaluate = F.coalesce(F.col("capacity"), F.col("unit_weight_in_ton"))
     else:
         evaluate = F.col("capacity")
-    return df.withColumn(
-        "capacity_interval", L.load_interval(evaluate, width=width, kind=file_type)
-    ).withColumn("type_interval", L.excavator_type_interval(evaluate))
+    return df.withColumns(
+        {
+            "capacity_interval": L.load_interval(evaluate, width=width, kind=file_type),
+            "type_interval": L.excavator_type_interval(evaluate),
+        }
+    )
 
 
 def finalize(df: DataFrame, fx: DataFrame | None, datasource: str | None) -> DataFrame:
     out = df
     if fx is not None:
         out = convert_usd_to_cny(out, fx, date_col="date_parsed")
-    out = out.withColumn("model", T.despace(F.col("model")))
+    cols = {"model": T.despace(F.col("model"))}
     if datasource is not None:
-        out = out.withColumn("datasource", F.lit(datasource))
-    return out
+        cols["datasource"] = F.lit(datasource)
+    return out.withColumns(cols)
 
 
 def render_export(df: DataFrame) -> DataFrame:
     """Sentinel rendering at the export boundary (C7 / SURVEY §1.4)."""
-    out = df
-    for c in ["brand", "model", "type", "capacity", "outliers"]:
-        out = out.withColumn(c, L.render_unknown(F.col(c)))
-    return out
+    return df.withColumns(
+        {c: L.render_unknown(F.col(c)) for c in ["brand", "model", "type", "capacity", "outliers"]}
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -354,29 +365,35 @@ def run_pipeline(
     min_amount: float = 10000.0,
     interval_width: int = 10,
     datasource: str | None = None,
-    persist: bool = True,
     strict_reference_compat: bool = False,
 ) -> DataFrame:
     """Full cleaning pipeline; returns the enriched DataFrame with typed
     NULLs (call ``render_export`` for the sentinel-rendered view).
 
-    ``persist``: the match/regex/inference stages each fork the fact
-    table (winner-selection branch + main branch join back on the id).
-    Without persistence Spark recomputes the whole upstream lineage per
-    fork — multiplicative at 6 forks — so the forked frames are cached
-    (MEMORY_AND_DISK; spill-safe at cluster scale)."""
+    The match/regex/inference stages each fork the fact table (winner-
+    selection branch + main branch joined back on the id).  The frames
+    they fork are cut from their lineage with an eager
+    ``localCheckpoint``, so the call itself runs three materialization
+    jobs (after ``normalize``, ``label_cascades`` and
+    ``capacity_from_text``) and the returned frame's plan starts at the
+    last cut, a ``LogicalRDD`` leaf that keeps its origin's statistics
+    (broadcast choices are unchanged).  Without the cuts every fork and
+    every later ``withColumn``/``join`` re-analyzes the whole upstream
+    plan (thousands of operators on a fixture batch).
 
-    def _pin(d: DataFrame) -> DataFrame:
-        return d.persist() if persist else d
-
+    Trade-off: checkpoint blocks (MEMORY_AND_DISK) have no lineage, so a
+    lost executor fails the batch instead of recomputing it.  The forked
+    frames are batch-sized, which makes that the cheaper risk here.  The
+    blocks are not released by ``spark.catalog.clearCache()``; Spark's
+    context cleaner drops them once the returned frame is garbage."""
     df = coerce_and_derive(shipments, min_amount=min_amount)
-    df = _pin(normalize(df))                 # forked by J1/J2
+    df = normalize(df).localCheckpoint(eager=True)  # forked by J1/J2
     df = match_catalog(df, model_ref)
-    df = _pin(
-        label_cascades(df, file_type=file_type, strict_reference_compat=strict_reference_compat)
-    )  # forked by J3 passes
+    df = label_cascades(
+        df, file_type=file_type, strict_reference_compat=strict_reference_compat
+    ).localCheckpoint(eager=True)  # forked by J3 passes
     df = regex_stage(df, regex_kb)
-    df = _pin(capacity_from_text(df))        # forked by J5 + outlier median
+    df = capacity_from_text(df).localCheckpoint(eager=True)  # forked by J5 + outlier median
     df = infer_models(df)
     df = mark_price_outliers(df)
     df = add_intervals(df, file_type=file_type, width=interval_width)

@@ -17,16 +17,19 @@ from etl_project_for_heavy_machinery_in_earthmoving_and_mobile_cranes_spark.plan
 
 
 @pytest.fixture(scope="module")
-def result(spark):
-    df = pipeline.run_pipeline(
+def pipeline_df(spark):
+    return pipeline.run_pipeline(
         fixtures.shipments_df(spark),
         fixtures.model_ref_df(spark),
         fixtures.regex_kb_df(spark),
         fixtures.fx_rates_df(spark),
         datasource="fixture_batch",
     )
-    rows = {r["shipment_id"]: r.asDict() for r in df.collect()}
-    return rows
+
+
+@pytest.fixture(scope="module")
+def result(pipeline_df):
+    return {r["shipment_id"]: r.asDict() for r in pipeline_df.collect()}
 
 
 # shipment_id → (brand, model, type, capacity, remark, new_used, outliers)
@@ -76,6 +79,19 @@ def test_row_labels(result, sid):
     assert r["remark"] == remark, f"remark {r['remark']}"
     assert r["new_used"] == nu
     assert r["outliers"] == out
+
+
+def test_returned_plan_starts_at_last_cut(pipeline_df, result):
+    """run_pipeline cuts the lineage at its fork points, so the returned
+    frame's analyzed plan holds only the stages after the last cut (a
+    few dozen operators, not the thousands of the uncut chain), and the
+    cut leaves every golden row as it was."""
+    tree = pipeline_df._jdf.queryExecution().analyzed().numberedTreeString()
+    n_ops = sum(1 for line in tree.splitlines() if line[:1].isdigit())
+    assert 0 < n_ops < 200, n_ops
+    cols = ["brand", "model", "type", "capacity", "remark", "new_used", "outliers"]
+    got = {sid: tuple(r[c] for c in cols) for sid, r in result.items()}
+    assert got == EXPECTED
 
 
 def test_intervals(result):

@@ -64,19 +64,32 @@ def test_pipeline_plan_no_cartesian(spark):
         pipeline,
     )
 
-    df = pipeline.run_pipeline(
-        fixtures.shipments_df(spark),
-        fixtures.model_ref_df(spark),
-        fixtures.regex_kb_df(spark),
-        fixtures.fx_rates_df(spark),
-    )
-    qe = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    p = qe.explainString(mode)
+
+    def explain(df):
+        return df._jdf.queryExecution().explainString(mode)
+
+    shipments = fixtures.shipments_df(spark)
+    model_ref = fixtures.model_ref_df(spark)
+    regex_kb = fixtures.regex_kb_df(spark)
+    df = pipeline.run_pipeline(shipments, model_ref, regex_kb, fixtures.fx_rates_df(spark))
+    p = explain(df)
     assert "CartesianProduct" not in p
-    # the containment/regex dims ride broadcast nested loop joins
-    assert "BroadcastNestedLoopJoin" in p
     assert "BroadcastHashJoin" in p
+    # run_pipeline's returned plan starts at its last lineage cut, after
+    # the containment and regex joins; check those on the stage frames
+    # that run them, cut as run_pipeline cuts them: the containment/regex
+    # dims ride broadcast nested loop joins
+    matched = pipeline.match_catalog(
+        pipeline.normalize(pipeline.coerce_and_derive(shipments)), model_ref
+    )
+    regexed = pipeline.regex_stage(
+        pipeline.label_cascades(matched).localCheckpoint(eager=True), regex_kb
+    )
+    for stage in (matched, regexed):
+        p = explain(stage)
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" in p
 
 
 def test_no_python_udfs_in_query_plans(spark, sf_dir):
